@@ -138,13 +138,7 @@ def scan_parallel(df: DataFrame, *key_cols: str) -> DataFrame:
     md5 / vector math): the A/B harness measured the same repartition
     LOSING 5-70% on cheap partial-aggregation scans (agg_hash, q1),
     so those call sites deliberately stay unparallelized.
-
-    Off switch: SPARK_GRAFT_SCAN_REPARTITION=off restores the r12
-    plans exactly (used by the A/B measurements in
-    OPTIMIZATION_r13.md).
     """
-    if os.environ.get("SPARK_GRAFT_SCAN_REPARTITION", "adaptive") == "off":
-        return df
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     try:

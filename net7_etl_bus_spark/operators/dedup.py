@@ -1535,26 +1535,17 @@ def _containment_lsh_frame(
     docs: DataFrame,
     n_bands: int = N_BANDS,
     rows_per_band: int = ROWS_PER_BAND,
-    pre_shingles: DataFrame | None = None,
 ) -> DataFrame:
     """dedup_containment_lsh's body with the banding knob exposed:
     permissive banding (more bands, fewer rows each) widens the
     candidate set to recover the short-in-long pairs Jaccard-tuned
-    bands miss — see dedup_containment_recall for the measurement.
-
-    ``pre_shingles`` (OPTIMIZATION_r14): an already-built
-    :func:`_shingles_counted` relation (doc_id, n_w, s) to use instead
-    of deriving one — dedup_containment_recall passes its ONE
-    checkpointed shingle relation so the exact and LSH halves share a
-    single tokenize->shingle->explode computation (guide §5 lineage;
-    same-run sharing only, rebuilt per invocation)."""
+    bands miss — see dedup_containment_recall for the measurement."""
     has_mega = probes.exists(
         docs.filter(F.length("text") * 3 >= _XS_CAP)
     ) and probes.exists(
         docs.filter(F.size(F.split(normalized_text("text"), " ")) > _XS_CAP)
     )
-    sh = pre_shingles if pre_shingles is not None else _shingles_counted(docs)
-    sig = _minhash_signature_from(sh, with_sets=True)
+    sig = _minhash_signature_from(_shingles_counted(docs), with_sets=True)
     if not has_mega:
         # Materialize the signature relation ONCE (OPTIMIZATION_r13) —
         # the same three-consumer shape as _verified_pairs (cand +

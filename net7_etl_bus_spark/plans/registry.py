@@ -210,7 +210,7 @@ def _bad_row(c: Column, scale: int) -> Column:
     work (the r4 shape built two different trees — `isnan|abs>=lim`
     for the flag, `~isnan & abs<lim` for the sum — which doubled the
     per-row predicate cost on every deterministic sum; measured ~5%
-    of q1 steady-state at sf0.1, scripts/proto_dsum_guard.py)."""
+    of q1 steady-state at sf0.1)."""
     return c.isNotNull() & (F.isnan(c) | (F.abs(c) >= F.lit(_dsum_lim(scale))))
 
 
@@ -262,8 +262,8 @@ def dsum(col: Column | str, scale: int = 2) -> Column:
 # beat one-level dsum by ~20% — until the extremes poison contract made
 # each measure need three partial legs, which erased the win (measured:
 # two-level med 1.72s vs one-level 1.28s at sf0.1). The helpers were
-# removed with the q1 revert; scripts/proto_dsum2.py keeps the
-# measurement harness and plans/tpch.py q1's docstring the numbers.
+# removed with the q1 revert; plans/tpch.py q1's docstring keeps the
+# numbers.
 
 
 def davg(col: Column | str, scale: int = 2) -> Column:

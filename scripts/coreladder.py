@@ -78,12 +78,12 @@ def main() -> None:
     results: dict[str, dict[str, float]] = {}
     for c in points:
         env = dict(os.environ, SPARK_GRAFT_CPUS=str(c))
+        # stderr streams through, so a failing worker shows its traceback
         proc = subprocess.run(
             [sys.executable, os.path.abspath(__file__),
              "--worker", str(c), "--reps", str(args.reps)],
-            env=env, capture_output=True, text=True, check=True,
+            env=env, stdout=subprocess.PIPE, text=True, check=True,
         )
-        sys.stderr.write(proc.stderr)
         results[str(c)] = json.loads(proc.stdout.strip().splitlines()[-1])
     lo, hi = str(points[0]), str(points[-1])
     ratios = {

@@ -2,9 +2,11 @@
 
 These tests pin the load-bearing properties of the optimized plans:
 filters and projections reach the parquet scan, dimensions broadcast,
-top-k never globally sorts, aggregates keep partial (map-side) phases,
-and nothing falls into a cartesian product. A plan regression here is
-a scale bug even when results stay correct.
+top-k never globally sorts, and aggregates keep partial (map-side)
+phases. A plan regression here is a scale bug even when results stay
+correct. The registry-wide audits (no cartesian product, no Python
+outside the declared surface, no expensive scan-side Filter) live in
+test_physical_plans.py.
 """
 
 from __future__ import annotations
@@ -13,24 +15,9 @@ import pytest
 
 from net7_etl_bus_spark.plans import registry
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, plan_of, renders
 
 QUERIES = registry.queries()
-
-
-def plan_of(spark, name: str) -> str:
-    import contextlib
-    import io
-
-    # Plan assertions must see the raw plan: the dedup cascade persists
-    # its signature/shingle relations, and the CacheManager substitutes
-    # InMemoryRelation into any later plan sharing that logical subtree.
-    spark.catalog.clearCache()
-    df = QUERIES[name](spark, SF_SMALL)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
-    return buf.getvalue()
 
 
 def test_q6_filters_pushed_to_scan(spark):
@@ -97,33 +84,13 @@ def test_limit_n_take_ordered(spark):
 
 
 def test_whole_stage_codegen_in_scan_agg(spark):
-    import contextlib
-    import io
-
     # Under AQE the codegen ids only appear once the final plan is
-    # materialized — execute, then explain.
+    # materialized — execute, then explain (a direct build, not plan_of).
     df = QUERIES["q1_pricing_summary"](spark, SF_SMALL)
     df.collect()
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
-    plan = buf.getvalue()
+    plan = renders(df)["formatted"]
     assert "codegen id" in plan
     assert "isFinalPlan=true" in plan
-
-
-def test_no_cartesian_products_anywhere(spark):
-    """Nothing in the registry may plan a CartesianProduct — the
-    intentional cross-ish joins (theta-range, brute-force similarity)
-    must be broadcast nested-loop instead (bounded build side)."""
-    offenders = []
-    for name in sorted(QUERIES):
-        try:
-            if "CartesianProduct" in plan_of(spark, name):
-                offenders.append(name)
-        except Exception:  # pragma: no cover - plan render only
-            pass
-    assert not offenders, offenders
 
 
 def test_minhash_single_explode_pass(spark):

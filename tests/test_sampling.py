@@ -242,13 +242,14 @@ def test_shuffle_epoch_shards_is_a_permutation_and_stable(spark):
 
     # stability under re-partitioning: same result at a different
     # shuffle-partition count (the df.orderBy(rand()) failure mode)
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "7")
     try:
         again = registry.queries()["shuffle_epoch_shards"](
             spark, SF_SMALL
         ).collect()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
     assert sorted((r.doc_id, r.shard, r.position) for r in rows) == sorted(
         (r.doc_id, r.shard, r.position) for r in again
     )

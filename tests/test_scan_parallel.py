@@ -4,7 +4,7 @@ The helper's CONTRACT — not just the plans it produces — must hold at
 every core count the driver benches at: repartition fires only when
 the parquet row groups behind the frame cannot split into at least
 half the session's default parallelism, takes the identity branch on
-well-split inputs, honors the A/B off switch, and never changes rows.
+well-split inputs, and never changes rows.
 """
 
 from __future__ import annotations
@@ -40,27 +40,19 @@ def test_identity_when_input_is_well_split(spark, tmp_path):
     identity branch — at production layouts the helper is a no-op by
     arithmetic, not by configuration. The gate needs units*2 >= target,
     so writing ceil(target/2) non-empty files suffices even when the
-    fixture has fewer rows than cores (ADVICE r13: repartition(target)
-    can yield empty files on a high-core host)."""
+    fixture has fewer rows than cores. Range partitioning on doc_id
+    keeps every file non-empty; round-robin can leave some empty."""
     target = spark.sparkContext.defaultParallelism
     n_rows = _docs(spark).count()
     n_files = -(-target // 2)  # units * 2 >= target
     if n_rows < n_files:
         pytest.skip(f"fixture too small ({n_rows} rows) for {n_files} files")
     dst = str(tmp_path / "split_docs")
-    _docs(spark).repartition(n_files).write.parquet(dst)
+    _docs(spark).repartitionByRange(n_files, "doc_id").write.parquet(dst)
     assert data._row_groups(dst) * 2 >= target
     df = spark.read.parquet(dst)
     out = data.scan_parallel(df, "doc_id")
     assert out is df  # identity: no repartition node added
-
-
-def test_off_switch_restores_identity(spark, monkeypatch):
-    # monkeypatch.setenv restores any harness-set prior value (e.g. an
-    # A/B run with =off) after the test — ADVICE r13.
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_REPARTITION", "off")
-    df = _docs(spark)
-    assert data.scan_parallel(df, "doc_id") is df
 
 
 def test_values_unchanged_by_repartition(spark):
