@@ -150,12 +150,23 @@ def scan_parallel(df: DataFrame, *key_cols: str) -> DataFrame:
         return df  # unreadable footer: never fail the query path
     if units * 2 >= target or target <= 2:
         return df
-    # Partition on xxhash64(keys), NOT the raw keys: a raw-key
-    # HashPartitioning(doc_id) would satisfy a downstream
-    # groupBy(doc_id) distribution and make Catalyst elide that
-    # aggregation's Exchange — the very node AQE reuses to share one
-    # signature/aggregation computation across multi-consumer branches
-    # (dedup cascade, curation). Hashing the key keeps the spread even
-    # and deterministic under task retries while leaving every
-    # downstream exchange (and its reuse) in place.
+    return spread(df, *key_cols)
+
+
+def spread(df: DataFrame, *key_cols: str) -> DataFrame:
+    """Hash-repartition ``df`` to ``defaultParallelism`` partitions: one
+    wave of tasks, one per task slot. A planned exchange only; no Spark
+    job runs here.
+
+    Partition on xxhash64(keys), NOT the raw keys: a raw-key
+    HashPartitioning(doc_id) would satisfy a downstream
+    groupBy(doc_id) distribution and make Catalyst elide that
+    aggregation's Exchange — the very node AQE reuses to share one
+    signature/aggregation computation across multi-consumer branches
+    (dedup cascade, curation). Hashing the key keeps the spread even
+    and deterministic under task retries while leaving every
+    downstream exchange (and its reuse) in place. An explicit
+    partition count is never coalesced by AQE.
+    """
+    target = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(target, F.xxhash64(*[F.col(c) for c in key_cols]))

@@ -11,20 +11,28 @@ enrichment columns; one bad row never fails the job.
 Spark-first redesign:
 
 * The whole 3-call dependency chain runs inside ONE ``mapInPandas``
-  invocation per row — no shuffle between calls (SURVEY.md §7.4.5).
+  stage — no shuffle between calls (SURVEY.md §7.4.5).
+* That stage always runs ``defaultParallelism`` tasks, one wave: its
+  input is hash-spread on the zip column (``data.spread``) just
+  before ``mapInPandas``. A CSV file plans one split, so without the
+  spread the whole stage is ONE task waiting on calls while the other
+  task slots idle. Each row costs three external calls (milliseconds);
+  the exchange costs microseconds per row, so the spread always pays.
 * Concurrency is an explicit per-task knob (thread pool of size N),
-  so cluster-wide external-API pressure = num_tasks x N and can be
-  budgeted: at 1000 executors set maxFilesPerTrigger /
-  maxOffsetsPerTrigger and N so tasks x N <= the API rate budget.
+  so external-API pressure = defaultParallelism x N and can be
+  budgeted: size the cluster's cores and N so that product stays
+  <= the API rate budget.
 * The budget itself is ENFORCED, not just documented: a per-task
-  :class:`TokenBucket` (rate = global budget / expected concurrent
-  tasks, :func:`per_task_rate`) gates every outbound call, so even if
-  the scheduler runs more batches per task than planned, aggregate
+  :class:`TokenBucket` gates every outbound call. Its rate is
+  ``per_task_rate(budget, defaultParallelism)`` — the exact share,
+  since that is how many tasks the stage runs — so even if the
+  scheduler feeds a task more batches than planned, aggregate
   pressure stays <= budget. The limiter is injected like the client
   (``rate_limiter_factory``) — there is no cross-executor coordination
   to depend on, which is exactly why the per-task quotient is the
   right mechanism on a shared-nothing cluster (SURVEY.md §7.4.5).
-* Arrow batches in/out — Python cost is per-batch, not per-row.
+* Arrow batches in/out, but the Python cost is per row: the pool
+  submits one call chain per row.
 * The client is injected (callable factory) — production wires an
   HTTP client; tests and the golden pipeline use the deterministic
   mock below, mirroring the reference's own mocked-API test strategy
@@ -40,6 +48,8 @@ from dataclasses import dataclass, field
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
+
+from ..data import spread
 
 # Columns appended by the enrichment stage.
 ENRICHMENT_COLUMNS = ("Latitude", "Longitude", "Elevation", "Timezone")
@@ -195,10 +205,11 @@ def per_task_rate(global_budget_per_sec: float, expected_tasks: int) -> float:
     """The per-task quotient of a cluster-wide API budget: each of the
     ``expected_tasks`` concurrently-running enrichment tasks gets an
     equal share, so the aggregate sustained rate is <= the budget with
-    zero cross-executor coordination. Size ``expected_tasks`` to the
-    MAX concurrent tasks the job can schedule (cores, or
-    maxFilesPerTrigger-bounded for streaming) — overestimating wastes
-    quota, underestimating overshoots by the ratio."""
+    zero cross-executor coordination. :func:`enrich_dataframe` spreads
+    its stage to exactly ``defaultParallelism`` tasks, so pass
+    ``expected_tasks=spark.sparkContext.defaultParallelism`` for the
+    exact share — overestimating wastes quota, underestimating
+    overshoots by the ratio."""
     if expected_tasks <= 0:
         raise ValueError(f"expected_tasks must be > 0, got {expected_tasks}")
     return float(global_budget_per_sec) / float(expected_tasks)
@@ -295,16 +306,20 @@ def enrich_dataframe(
     """Append Latitude/Longitude/Elevation/Timezone via bounded-parallel
     per-row enrichment (mapInPandas + per-task thread pool).
 
-    The pool size is the reference's TransformMaxDegreeOfParallelism
-    (Constants.cs:21 default 5) — but per task: total external-call
-    parallelism is numActiveTasks x max_concurrency. The RATE budget is
+    The input is hash-spread on ``zip_column`` to ``defaultParallelism``
+    partitions first (``data.spread``; a planned exchange, no
+    Spark job runs here), so the stage runs ``defaultParallelism``
+    tasks whatever the input's split count. The pool size is the
+    reference's TransformMaxDegreeOfParallelism (Constants.cs:21
+    default 5) — but per task: total external-call parallelism is
+    defaultParallelism x max_concurrency. The RATE budget is
     enforced, not inferred from the pool: pass
     ``rate_limiter_factory=lambda: TokenBucket(per_task_rate(budget,
-    tasks))`` and every outbound call on every pool thread acquires a
-    token first, capping each task's sustained call rate at its share
-    of the cluster-wide API quota (tasks x share <= budget). Built
-    once per task like the client, so there is no serialized shared
-    state and no cross-executor coordination.
+    defaultParallelism))`` and every outbound call on every pool thread
+    acquires a token first, capping each task's sustained call rate at
+    its exact share of the cluster-wide API quota. Built once per task
+    like the client, so there is no serialized shared state and no
+    cross-executor coordination.
 
     ``attempts`` > 1 retries each call with backoff+jitter;
     ``with_error_column=True`` appends EnrichmentError (null on
@@ -345,7 +360,7 @@ def enrich_dataframe(
                     pdf["EnrichmentError"] = [err for _, err in results]
                 yield pdf
 
-    return df.mapInPandas(run, out_schema)
+    return spread(df, zip_column).mapInPandas(run, out_schema)
 
 
 def split_quarantine(enriched: DataFrame) -> tuple[DataFrame, DataFrame]:

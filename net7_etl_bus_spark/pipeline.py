@@ -204,10 +204,13 @@ def run_etl(
         processed = valid_processed_keys(spark, target_path, now, ttl_days)
         todo = incoming.join(processed, "CompositeKey", "left_anti")
 
-        # Step 4 — enrichment (T1-T4) + audit columns (P4). Persisted:
-        # every downstream action (quarantine write, count, MERGE
-        # write) reads the one cached enrichment pass — without it
-        # each action re-executes the mapInPandas stage, multiplying
+        # Step 4 — enrichment (T1-T4) + audit columns (P4).
+        # enrich_dataframe hash-spreads ``todo`` to defaultParallelism
+        # tasks, each with its own max_concurrency pool, so the
+        # single-split CSV does not leave the stage on one core.
+        # Persisted: every downstream action (quarantine write, count,
+        # MERGE write) reads the one cached enrichment pass — without
+        # it each action re-executes the mapInPandas stage, multiplying
         # every external HTTP call with a real client, and the counted
         # rows could diverge from the written rows if responses vary
         # between executions.

@@ -123,6 +123,25 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_driver_mem(meminfo: str | None = None) -> str:
+    """The local JVM heap default: half of the host's ``MemTotal``, at
+    most 16g — a 16g heap on a 15 GiB host would let the JVM grow past
+    physical memory before it collects. ``meminfo`` is the text of
+    ``/proc/meminfo`` (read when None); where it has no ``MemTotal``
+    line (non-Linux hosts) the default stays 16g."""
+    if meminfo is None:
+        try:
+            with open("/proc/meminfo", encoding="ascii") as f:
+                meminfo = f.read()
+        except OSError:
+            meminfo = ""
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            total_mib = int(line.split()[1]) // 1024
+            return f"{min(16 * 1024, total_mib // 2)}m"
+    return "16g"
+
+
 def get_spark(
     app_name: str = "net7-etl-bus-spark",
     master: str | None = None,
@@ -153,7 +172,7 @@ def get_spark(
         # explicit submit-time setting.
         builder = builder.config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
         )
 
     conf = dict(_DEFAULT_CONF)

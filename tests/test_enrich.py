@@ -72,8 +72,10 @@ def test_per_row_errors_never_fail_job(spark):
 
 def test_bounded_concurrency(spark):
     """Observed in-flight parallelism never exceeds max_concurrency
-    (the reference's MaxDegreeOfParallelism semantics). The spy client
-    runs inside the executor's Python worker, so violations are
+    (the reference's MaxDegreeOfParallelism semantics). The cap is per
+    task: the spy state is built once per factory call, which is once
+    per task, and the stage runs defaultParallelism tasks. The spy
+    client runs inside the executor's Python worker, so violations are
     reported in-band: a geocode observed above the limit raises, which
     would surface as a null Latitude."""
 
@@ -96,7 +98,7 @@ def test_bounded_concurrency(spark):
 
         return Slow()
 
-    df = _zip_df(spark, [f"{10000 + i}" for i in range(40)]).coalesce(1)
+    df = _zip_df(spark, [f"{10000 + i}" for i in range(40)])
     rows = enrich_dataframe(df, factory, max_concurrency=3).collect()
     assert len(rows) == 40
     assert all(r["Latitude"] is not None for r in rows)  # no cap violations
@@ -262,10 +264,53 @@ def test_enrich_dataframe_with_rate_limiter_same_results(spark):
     base = enrich_dataframe(_zip_df(spark, zips)).orderBy("ZipCode").collect()
     limited = (
         enrich_dataframe(
-            _zip_df(spark, zips).coalesce(1),
+            _zip_df(spark, zips),
             rate_limiter_factory=lambda: TokenBucket(rate=1e9),
         )
         .orderBy("ZipCode")
         .collect()
     )
     assert [r.asDict() for r in base] == [r.asDict() for r in limited]
+
+
+def _csv_zips(spark, tmp_path, n):
+    """A single-file CSV of ``n`` distinct zips: one planned split."""
+    path = tmp_path / "zips.csv"
+    path.write_text("ZipCode\n" + "".join(f"{10000 + i}\n" for i in range(n)))
+    return spark.read.csv(str(path), header=True, schema="ZipCode string")
+
+
+def test_enrichment_spreads_single_split_input(spark, tmp_path):
+    """A one-split CSV still enriches on every task slot: the stage
+    output has defaultParallelism non-empty partitions, and every row
+    carries the mock client's value for its zip."""
+    n = spark.sparkContext.defaultParallelism
+    df = _csv_zips(spark, tmp_path, 3000)
+    assert df.rdd.getNumPartitions() == 1
+    out = enrich_dataframe(df).withColumn("pid", F.spark_partition_id()).collect()
+    assert {r["pid"] for r in out} == set(range(n))
+    assert len(out) == 3000
+    mock = DeterministicMockClient()
+    for r in out:
+        lat, lng = mock.geocode(r["ZipCode"])
+        want = (lat, lng, mock.elevation(r["ZipCode"], lat, lng),
+                mock.timezone(r["ZipCode"], lat, lng))
+        assert (r["Latitude"], r["Longitude"], r["Elevation"], r["Timezone"]) == want
+
+
+def test_enrich_dataframe_runs_no_job(spark, tmp_path):
+    """Building the enrichment plan submits no Spark job: the spread is
+    a planned exchange, not an action. The input carries a broadcast
+    anti-join, as ``run_etl``'s does, so a probe such as
+    ``df.rdd.getNumPartitions()`` would run its broadcast stage."""
+    done = spark.createDataFrame([("10001",)], "ZipCode string")
+    df = _csv_zips(spark, tmp_path, 100).join(done, "ZipCode", "left_anti")
+    sc = spark.sparkContext
+    sc.setJobGroup("enrich-build", "enrich_dataframe plan build")
+    try:
+        enrich_dataframe(df)
+        jobs = sc.statusTracker().getJobIdsForGroup("enrich-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []

@@ -614,3 +614,17 @@ def test_bench_compact_line_fits_tail_capture():
     assert "queries" in got2
     assert "queries_canary_norm" not in got2
     assert "close_queries_canary_norm" not in got2
+
+
+def test_driver_heap_default_is_half_of_memtotal_capped():
+    """The local heap default follows the host: half of MemTotal, at
+    most 16g, and 16g where no MemTotal line can be read."""
+    from net7_etl_bus_spark.session import default_driver_mem
+
+    def meminfo(kib):
+        return f"MemFree:         1234 kB\nMemTotal:       {kib} kB\nBuffers: 1 kB\n"
+
+    assert default_driver_mem(meminfo(15 * 1024 * 1024)) == "7680m"
+    assert default_driver_mem(meminfo(128 * 1024 * 1024)) == "16384m"
+    assert default_driver_mem(meminfo(4 * 1024 * 1024 + 1023)) == "2048m"
+    assert default_driver_mem("") == "16g"

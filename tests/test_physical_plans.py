@@ -11,6 +11,8 @@ fails here, at sf0.001, long before it melts a cluster.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -440,6 +442,20 @@ def test_bcast_index_scan_feeds_pandas_directly(spark):
     assert "Exchange" not in below_scorer, (
         f"corpus-side shuffle below the scorer:\n{plan}"
     )
+
+
+def test_enrichment_input_spread_to_default_parallelism(spark):
+    """http_enrichment_mock: the one-split zip CSV is hash-spread on the
+    zip column to defaultParallelism partitions directly below the
+    MapInPandas enrichment stage, so the stage runs one task per task
+    slot rather than one task in all."""
+    plan = plan_of(spark, "http_enrichment_mock", mode="simple")
+    n = spark.sparkContext.defaultParallelism
+    spread = r"Exchange hashpartitioning\(xxhash64\(ZipCode[^)]*\), (\d+)\)"
+    assert re.findall(spread, plan) == [str(n)] and plan.count("Exchange") == 1, plan
+    lines = plan.splitlines()
+    i = next(k for k, line in enumerate(lines) if "MapInPandas" in line)
+    assert re.search(spread, lines[i + 1]), plan
 
 
 def test_zorder_needs_no_window_or_join(spark):
