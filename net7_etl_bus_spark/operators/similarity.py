@@ -627,7 +627,7 @@ def ivf_search_frame(
     where the flat broadcast argmin's n*K cosines measured exponent
     1.09 on the r10 growth ladder; queries still rank ALL K centroids
     exactly (n_queries rows — free) so the probe tier is unchanged.
-    scripts/annladder.py measures both variants for SCALE.md."""
+    SCALE.md records both variants' ladder measurements."""
     if n_super is None and super_cent is None:
         ac = e.join(F.broadcast(cent)).withColumn(
             "cos_c", _cosine(F.col("embedding"), F.col("cent_emb"))
@@ -1590,8 +1590,8 @@ def ivfpq_search_frame(
     (same contract as ivf_search_frame, including the ``n_super``
     two-tier assignment cascade; the PQ codebooks are per-SUBSPACE
     artifacts independent of K, so only the coarse assign/probe tier
-    changes with corpus size). Measured at scaled K by
-    scripts/annladder.py for the SCALE.md ladder."""
+    changes with corpus size). Its scaled-K measurements are in the
+    SCALE.md ladder."""
     if n_super is None and super_cent is None:
         w_assign = Window.partitionBy("vec_id").orderBy(
             F.col("cos_c").desc(), "cid"

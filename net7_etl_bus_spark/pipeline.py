@@ -13,8 +13,10 @@ One call = one run of the reference's message-triggered pipeline:
 
 The whole batch body (steps 2-4 and the MERGE source) is ONE lazy
 logical plan — Catalyst sees scan->project->dedup->anti-join->enrich
-and optimizes it end-to-end; only the gate decision and control-table
-bookkeeping are driver-side actions. The streaming entry point
+and optimizes it end-to-end. The gate decision and the control-table
+bookkeeping are plain Python over the table's few rows
+(``sinks.read_control``): they submit no Spark job, so a gated trigger
+runs none at all. The streaming entry point
 (streaming/trigger.py) calls exactly this function from foreachBatch.
 """
 
@@ -49,7 +51,6 @@ class RunResult:
 
 
 def evaluate_run_gate(
-    spark: SparkSession,
     control_path: str,
     checksum: str,
     force_run: bool,
@@ -58,8 +59,8 @@ def evaluate_run_gate(
 ) -> bool:
     """F1 (reference DataflowProcessor.cs:86-99): skip when a control
     row with the same checksum is active, or started within TTL and
-    finished SUCCESSFULLY. The control table is tiny — this collects
-    one boolean.
+    finished SUCCESSFULLY. The control table is a few rows — this is a
+    Python predicate over them, no Spark job. A naive ``now`` is UTC.
 
     DELIBERATE DEVIATION: the reference's finished-arm is
     ``EndDateTimeUtc != null`` with no status check
@@ -77,20 +78,22 @@ def evaluate_run_gate(
     kill-mid-foreachBatch recovery test (tests/test_streaming.py)."""
     if force_run:
         return True
+    if now.tzinfo is None:
+        now = now.replace(tzinfo=timezone.utc)
     cutoff = now - timedelta(days=ttl_days)
-    control = sinks.read_control(spark, control_path)
-    blocking = control.filter(
-        (F.col("FileChecksum") == checksum)
-        & (
-            F.col("IsActive")
-            | (
-                (F.col("ImportStartTimeUtc") > F.lit(cutoff))
-                & F.col("EndDateTimeUtc").isNotNull()
-                & (F.col("Status") == STATUS_COMPLETE)
+    return not any(
+        r["FileChecksum"] == checksum
+        and (
+            r["IsActive"]
+            or (
+                r["ImportStartTimeUtc"] is not None
+                and r["ImportStartTimeUtc"] > cutoff
+                and r["EndDateTimeUtc"] is not None
+                and r["Status"] == STATUS_COMPLETE
             )
         )
+        for r in sinks.read_control(control_path)
     )
-    return blocking.limit(1).count() == 0
 
 
 def valid_processed_keys(
@@ -179,12 +182,13 @@ def run_etl(
     (DataflowProcessor.cs:117-129 logs-and-continues per row)."""
     now = now or datetime.now(timezone.utc).replace(tzinfo=None)
 
-    # Step 1 — gate (driver-side; two tiny control-table actions).
+    # Step 1 — gate and Running row: driver-side reads and one write of
+    # the control table (pyarrow), no Spark job.
     checksum = file_checksum(csv_path)
-    if not evaluate_run_gate(spark, control_path, checksum, force_run, now, ttl_days):
+    if not evaluate_run_gate(control_path, checksum, force_run, now, ttl_days):
         return RunResult(False, "duplicate-run gate: checksum already active/fresh")
     run_id = sinks.control_insert_running(
-        spark, control_path, csv_path.rsplit("/", 1)[-1], checksum, now
+        control_path, csv_path.rsplit("/", 1)[-1], checksum, now
     )
 
     try:
@@ -195,7 +199,7 @@ def run_etl(
         incoming = dedup_incoming(incoming, on_duplicate)
         rows_incoming = incoming.count()
         if rows_incoming == 0:
-            sinks.control_finalize(spark, control_path, run_id, True, now)
+            sinks.control_finalize(control_path, run_id, True, now)
             return RunResult(True, "empty input", run_id, 0, 0, 0)
 
         # Step 3 — incremental anti-join (J2). Broadcast the (small)
@@ -253,7 +257,7 @@ def run_etl(
             sinks.upsert_parquet(spark, updates, target_path)
         finally:
             enriched.unpersist()
-        sinks.control_finalize(spark, control_path, run_id, True, now)
+        sinks.control_finalize(control_path, run_id, True, now)
         return RunResult(
             True, "complete", run_id, rows_incoming, rows_to_process, rows_to_process
         )
@@ -267,7 +271,7 @@ def run_etl(
         # instead acknowledges the message and strands the failed file
         # behind its own Error row for TTL days
         # (ServiceBusWorker.cs:140-155).
-        sinks.control_finalize(spark, control_path, run_id, False, now)
+        sinks.control_finalize(control_path, run_id, False, now)
         raise
 
 

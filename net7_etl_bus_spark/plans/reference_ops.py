@@ -357,8 +357,8 @@ def run_gate_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberate deviation that errored runs do NOT block (the reference
     stamps EndDateTimeUtc on Error and would strand the file for TTL
     days; see pipeline.evaluate_run_gate). Evaluated as a broadcast
-    join against the (tiny) control table — the driver-side decision
-    in the live pipeline collects this one boolean."""
+    join against the (tiny) control table — the live pipeline applies
+    the same predicate in Python to the control rows, no Spark job."""
     cand = spark.createDataFrame(_GATE_CANDIDATES, "checksum string, force_run boolean")
     imports = spark.read.parquet(ETL_IMPORTS_PATH)
     blocking = imports.filter(

@@ -72,93 +72,14 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-# Sweep ordering for the driver's count-capped correctness run (it
-# checks exactly the FIRST 50 queries per round in registration order).
-# Round-13 front of the line (r12 verdict item 1): the 1 key NEW in
-# r13 (never attested: sim_search_ivf_cascade — the two-tier
-# assignment cascade under its own oracle), then the 2 r13 clock-fuzz
-# hardenings in _REVERIFY, then the first 47 (alphabetical) of the 50
-# r8-stale keys — computed from CORRECTNESS_r01..r12.json via
-# scripts/rotation.py. Three r8-stale keys (the alphabetical tail)
-# slip to r14.
-
-# Keys whose query or oracle SEMANTICS changed since their latest
-# driver verdict — rotated to the front like never-attested keys.
-# Each entry maps the key to the LAST ROUND WHOSE VERDICTS PREDATE
-# THE EDIT: verdicts from rounds at or before that value attest the
-# OLD form and are ignored; the first later verdict (normally the
-# edit round's own end-of-round sweep) re-attests the current form
-# and the entry expires on its own (ADVICE r11: the previous
-# bare-tuple form masked post-edit verdicts too, so a forgotten
-# manual removal would pin the key as never-attested forever).
-# Entries are deleted at the next rotation for legibility — the nine
-# r12 ragged/holes hardenings landed green in CORRECTNESS_r12 and are
-# gone per that contract (VERDICT r12 item 1).
-_REVERIFY: dict[str, int] = {
-    # r13 clock-fuzz hardening (the new `clock` class — timestamp
-    # precision/range edges — found both on its first full run):
-    # agg_decay_weighted's age now clamps INTO [0, K] (a future order
-    # date made the weight shift count 8006 — DuckDB errored, Spark's
-    # shiftleft silently wrapped mod 64: a wrong answer with no
-    # signal), and join_asof_pandas routes timestamps through the UDF
-    # as exact int64 µs (the worker's Arrow->pandas ns cast crashed
-    # the task on any ts past 2262; merge_asof replaced by exact
-    # searchsorted — its float64 coercion rounds µs beyond 2^53).
-    "agg_decay_weighted": 12,
-    "join_asof_pandas": 12,
-}
-# After this sweep lands green: zero keys with a verdict older than
-# r9 except the three slipped r8 keys. The composition (1 new + 2
-# reverify + 47 r8-stale) and the marker position are pinned by
-# tests/test_guards.py::test_sweep_rotation_arithmetic. Keys not in
-# the registry are ignored, so this list never breaks registration.
-_SWEEP_PRIORITY: tuple[str, ...] = (
-    # --- NEW in r13, never driver-attested (1 key) ---
-    "sim_search_ivf_cascade",
-    # --- query/oracle semantics edited after last verdict (the two
-    # r13 clock-fuzz hardenings in _REVERIFY) ---
-    "agg_decay_weighted", "join_asof_pandas",
-    # --- last driver verdict: r8 (first 47 of the 50 r8-stale keys,
-    # alphabetical) ---
-    "agg_mode", "agg_unpivot", "anomaly_zscore",
-    "dedup_minhash_verified", "dedup_paragraph", "dedup_prefix",
-    "dq_audit", "emb_semdedup", "extract_nested_json",
-    "graph_degree_stats", "graph_pagerank", "profile_columns",
-    "q11_important_stock", "q12_priority_shipping",
-    "q13_order_count_dist", "q15_top_supplier",
-    "q17_small_quantity_revenue", "q18_large_volume_customers",
-    "q19_disjunctive_revenue", "q20_excess_suppliers",
-    "q21_waiting_suppliers", "q22_dormant_customers",
-    "q2_min_cost_supplier", "q4_order_priority", "q7_volume_shipping",
-    "q8_market_share", "q9_product_type_profit", "sample_hash_pct",
-    "sample_stratified", "sample_token_budget", "sample_weighted",
-    "split_train_test", "subquery_exists", "subquery_in_nested",
-    "subquery_lateral", "subquery_scalar_correlated",
-    "text_bm25_search", "text_bpe_pairs", "text_bpe_train",
-    "text_decontaminate", "text_feature_hash", "text_inverted_index",
-    "text_lm_score", "text_ngram_freq", "text_ngram_lm_counts",
-    "text_repetition", "text_scrub_pii",
-    # ---- 50-key budget line (the driver stops here) ----
-    # --- next in line for r14: the three slipped r8 keys, then the 41
-    # r9-stale keys (locally diffcheck-green) ---
-    "text_tfidf_topk", "text_url_canonicalize", "text_url_extract",
-)
-
-
-def _sweep_order(d: dict) -> dict:
-    front = {k: d[k] for k in _SWEEP_PRIORITY if k in d}
-    rest = {k: v for k, v in d.items() if k not in front}
-    return {**front, **rest}
-
-
 def queries() -> dict[str, QueryFn]:
     _load_all()
-    return _sweep_order(_QUERIES)
+    return dict(_QUERIES)
 
 
 def oracles() -> dict[str, str]:
     _load_all()
-    return _sweep_order(_ORACLES)
+    return dict(_ORACLES)
 
 
 _LOADED = False
@@ -171,19 +92,13 @@ def _load_all() -> None:
         return
     # Imports are deferred so `import net7_etl_bus_spark` stays cheap
     # and there is no circular-import knot with the operator modules.
-    #
-    # ORDER MATTERS for the driver's correctness sweep, which checks
-    # queries in registration order and may be count-capped (round 1
-    # stopped at exactly the first 50). Modules whose queries have not
-    # yet received a driver verdict register FIRST; modules already
-    # fully green in CORRECTNESS_r01.json register last.
     from ..plans import reference_ops, tpch  # noqa: F401
     from ..operators import analytics, layout  # noqa: F401
     from .. import pipeline  # noqa: F401
     from ..operators import windows  # noqa: F401
     from ..streaming import batch_equiv  # noqa: F401
     from ..operators import cdc, curation, geo, graph, sampling, similarity, text, timeseries  # noqa: F401
-    from ..operators import relational  # noqa: F401  (subqueries + dq_audit unverified)
+    from ..operators import relational  # noqa: F401
     from ..functions import scalar, udf_surface  # noqa: F401
     from ..operators import dedup, enrich, multimodal  # noqa: F401
     from ..sources import layouts  # noqa: F401

@@ -21,18 +21,26 @@ Keyed MERGE is naturally idempotent: replaying the same batch
 (same keys, same values) converges to the same table state — that is
 the engine's exactly-once story per SURVEY.md §7.4.1 (the reference
 is at-most-once: it completes the queue message even on failure).
+
+The control table holds one row per run. It is read and rewritten in
+the driver with pyarrow, as Structured Streaming keeps its offset and
+commit logs, so its bookkeeping submits no Spark job. Both the table
+writes and the control writes commit through one swap step,
+:func:`_swap_in`.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import uuid
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import ETL_IMPORT_SCHEMA, STATUS_COMPLETE, STATUS_ERROR, STATUS_RUNNING
 
@@ -54,25 +62,28 @@ WHEN NOT MATCHED THEN INSERT *
 
 
 def _atomic_overwrite(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...] = (),
+    df: DataFrame, path: str, partition_by: tuple[str, ...] = ()
 ) -> None:
-    """Write df to a temp dir SIBLING of the target, then swap into
-    place with same-filesystem os.rename only (a cross-filesystem
-    shutil.move degrades to copy+delete and is not atomic). The old
-    target is kept until the new rename has succeeded, so a crash in
-    the swap window leaves either the old or the new table, never
-    neither. Parquet-dir emulation of a transactional commit (a
-    lakehouse table gets this from its log; see DELTA_MERGE_SQL)."""
-    token = uuid.uuid4().hex
-    tmp = f"{path}.tmp-{token}"
+    """Write df to a temp dir SIBLING of the target, then swap it into
+    place (:func:`_swap_in`). Parquet-dir emulation of a transactional
+    commit (a lakehouse table gets this from its log; see
+    DELTA_MERGE_SQL)."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(tmp)
-    old = f"{path}.old-{token}"
+    _swap_in(tmp, path)
+
+
+def _swap_in(tmp: str, path: str) -> None:
+    """Commit the fully written sibling ``tmp`` (file or dir) as
+    ``path`` with same-filesystem os.rename only (a cross-filesystem
+    shutil.move degrades to copy+delete and is not atomic). The old
+    target is kept until the new rename has succeeded, so a crash in
+    the swap window leaves either the old or the new table, never
+    neither."""
+    old = f"{path}.old-{uuid.uuid4().hex}"
     had_old = os.path.exists(path)
     if had_old:
         os.rename(path, old)
@@ -85,7 +96,7 @@ def _atomic_overwrite(
     if os.path.isdir(old):
         shutil.rmtree(old)
     elif os.path.exists(old):
-        os.remove(old)  # target may be a single parquet file (fixture copy)
+        os.remove(old)  # target may be a single parquet file
 
 
 N_UPSERT_BUCKETS = 16
@@ -140,7 +151,7 @@ def upsert_parquet(
         updates = updates.drop(_BUCKET)
     updates = updates.withColumn(_BUCKET, _bucket_of(key, n_buckets))
     if not os.path.exists(path):
-        _atomic_overwrite(spark, updates, path, partition_by=(_BUCKET,))
+        _atomic_overwrite(updates, path, partition_by=(_BUCKET,))
         return
 
     bucketed = _is_bucketed(path)
@@ -176,14 +187,12 @@ def upsert_parquet(
 
     if not bucketed:
         # One-time migration of a flat/file target to the bucketed layout.
-        _atomic_overwrite(spark, merged, path, partition_by=(_BUCKET,))
+        _atomic_overwrite(merged, path, partition_by=(_BUCKET,))
         return
-    _swap_touched_buckets(spark, merged, path, touched)
+    _swap_touched_buckets(merged, path, touched)
 
 
-def _swap_touched_buckets(
-    spark: SparkSession, merged: DataFrame, path: str, touched: list[int]
-) -> None:
+def _swap_touched_buckets(merged: DataFrame, path: str, touched: list[int]) -> None:
     """Write the merged rows (touched buckets only) partitioned by
     bucket, then swap each touched ``__bucket=k`` dir into the target
     with same-filesystem renames. Old dirs are parked OUTSIDE the
@@ -207,54 +216,44 @@ def _swap_touched_buckets(
 
 
 # --- control table ------------------------------------------------------
+# Timestamps are written UTC-adjusted, so Spark reads them back as
+# TIMESTAMP, as it does a Spark-written table (naive ones would read as
+# TIMESTAMP_NTZ); a naive datetime passed in is taken as UTC.
+
+_CONTROL_ARROW = to_arrow_schema(ETL_IMPORT_SCHEMA)
 
 
-def _utcnow_naive() -> datetime:
-    return datetime.now(timezone.utc).replace(tzinfo=None)
+def read_control(path: str) -> list[dict]:
+    """The control rows as dicts (UTC-aware timestamps), ``[]`` when
+    the table does not exist yet. Reads a single parquet file (the
+    fixture) and a Spark-written directory alike."""
+    if not os.path.exists(path):
+        return []
+    return pq.read_table(path).cast(_CONTROL_ARROW).to_pylist()
 
 
-def read_control(spark: SparkSession, path: str) -> DataFrame:
-    if os.path.exists(path):
-        return spark.read.parquet(path)
-    return spark.createDataFrame([], ETL_IMPORT_SCHEMA)
+def _write_control(rows: list[dict], path: str) -> None:
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    pq.write_table(pa.Table.from_pylist(rows, schema=_CONTROL_ARROW), tmp)
+    _swap_in(tmp, path)
 
 
 def control_insert_running(
-    spark: SparkSession,
-    path: str,
-    file_name: str,
-    checksum: str,
-    now: datetime | None = None,
+    path: str, file_name: str, checksum: str, now: datetime | None = None
 ) -> int:
-    """S4: append a Running control row; returns its Id (max+1 over a
-    tiny driver-side table — the reference uses a DB identity)."""
-    control = read_control(spark, path)
-    row = control.agg(F.max("Id")).collect()[0][0]
-    next_id = int(row or 0) + 1
-    new = spark.createDataFrame(
-        [
-            (
-                next_id,
-                file_name,
-                checksum,
-                True,
-                STATUS_RUNNING,
-                now or _utcnow_naive(),
-                None,
-            )
-        ],
-        ETL_IMPORT_SCHEMA,
-    )
-    _atomic_overwrite(spark, control.unionByName(new), path)
+    """S4: append a Running control row; returns its Id (max+1 over the
+    driver-side rows — the reference uses a DB identity)."""
+    rows = read_control(path)
+    next_id = max((r["Id"] for r in rows), default=0) + 1
+    start = now or datetime.now(timezone.utc)
+    row = (next_id, file_name, checksum, True, STATUS_RUNNING, start, None)
+    rows.append(dict(zip(_CONTROL_ARROW.names, row)))
+    _write_control(rows, path)
     return next_id
 
 
 def control_finalize(
-    spark: SparkSession,
-    path: str,
-    run_id: int,
-    success: bool,
-    now: datetime | None = None,
+    path: str, run_id: int, success: bool, now: datetime | None = None
 ) -> None:
     """C1: set Status Complete/Error and stamp the end time (reference
     DataflowProcessor.cs:292-308, SetImportRecordCompleteAsync).
@@ -266,24 +265,13 @@ def control_finalize(
     TTL window and the same file can legitimately re-run after the TTL
     lapses — pinned by the gate tests (stale-completed-run re-run
     case in tests/test_pipeline.py)."""
-    control = read_control(spark, path)
-    status = STATUS_COMPLETE if success else STATUS_ERROR
-    end = now or _utcnow_naive()
-    updated = (
-        control.withColumn(
-            "Status",
-            F.when(F.col("Id") == run_id, F.lit(status)).otherwise(F.col("Status")),
-        )
-        .withColumn(
-            "IsActive",
-            F.when(F.col("Id") == run_id, F.lit(False)).otherwise(F.col("IsActive")),
-        )
-        .withColumn(
-            "EndDateTimeUtc",
-            F.when(F.col("Id") == run_id, F.lit(end)).otherwise(F.col("EndDateTimeUtc")),
-        )
-    )
-    _atomic_overwrite(spark, updated, path)
+    rows = read_control(path)
+    for r in rows:
+        if r["Id"] == run_id:
+            r["Status"] = STATUS_COMPLETE if success else STATUS_ERROR
+            r["IsActive"] = False
+            r["EndDateTimeUtc"] = now or datetime.now(timezone.utc)
+    _write_control(rows, path)
 
 
 def compact_parquet(
@@ -314,7 +302,7 @@ def compact_parquet(
         # Keep the upsert sink's bucket layout (compaction must not
         # silently un-prune future MERGEs): ~n_files per bucket dir.
         per_bucket = df.repartition(max(1, n_files), F.col(_BUCKET))
-        _atomic_overwrite(spark, per_bucket, path, partition_by=(_BUCKET,))
+        _atomic_overwrite(per_bucket, path, partition_by=(_BUCKET,))
         return n_files
-    _atomic_overwrite(spark, df.repartition(n_files), path)
+    _atomic_overwrite(df.repartition(n_files), path)
     return n_files

@@ -362,139 +362,6 @@ def test_events_funnel_bot_user_routing_is_exact(spark):
     assert by_user[5][0] is None                # no signup
 
 
-def test_sweep_rotation_arithmetic():
-    """The r6 budget-line marker bug (marker comment sat at position 56
-    while the driver stops at 50) was caught by the advisor, not a test
-    (VERDICT r7 item 8). Pin three facts about ``_SWEEP_PRIORITY``:
-
-    1. every listed key exists in the registry (a typo'd key silently
-       drops out of the front-50 via the ``if k in d`` filter);
-    2. the budget-line marker comment in the SOURCE sits after exactly
-       50 keys — the true driver cutoff;
-    3. the r13 front-50 equals the documented composition from the r12
-       verdict plus the r13 clock-fuzz hardenings: the key NEW in r13
-       (sim_search_ivf_cascade) and the 2 edited-semantics keys in
-       _REVERIFY (never attested on their current form), plus the
-       first 47 alphabetical of the 50 r8-stale keys (verified against
-       CORRECTNESS_r01..r12.json when present — every front-50 key
-       must be never-attested or r8-stale, and exactly three r8-stale
-       keys, the alphabetical tail, are left out).
-
-    Ordering WITHIN the front-50 is deliberately unconstrained
-    (ADVICE r9): the driver takes the first 50 keys of the dict as a
-    set of work — it runs all of them regardless of order — so the
-    membership comparisons below are the whole contract; the
-    whole-stale-groups-first layout in the source is for human
-    legibility only.
-    """
-    import inspect
-    import json
-    import re
-
-    from net7_etl_bus_spark.plans import registry
-    from net7_etl_bus_spark.plans.registry import _SWEEP_PRIORITY, queries
-
-    q = queries()
-    missing = [k for k in _SWEEP_PRIORITY if k not in q]
-    assert not missing, f"_SWEEP_PRIORITY names unregistered keys: {missing}"
-
-    src = inspect.getsource(registry)
-    tuple_src = src.split("_SWEEP_PRIORITY: tuple[str, ...] = (")[1]
-    before_marker = tuple_src.split("50-key budget line")[0]
-    # [A-Za-z]: key names are mostly snake_case but udaf_applyInPandas
-    # carries the Spark API's camelCase — a lowercase-only regex
-    # silently drops it from the count (bit us when it rotated into
-    # the r10 front-50)
-    keys_before = re.findall(r'"([A-Za-z0-9_]+)"', before_marker)
-    assert len(keys_before) == 50, (
-        f"budget-line marker sits after {len(keys_before)} keys, not 50"
-    )
-    assert list(_SWEEP_PRIORITY[:50]) == keys_before
-
-    # Composition check against the committed driver verdicts.
-    import glob
-    import os
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    # r* not r0*: the two-digit rounds (r10+) must count — the r0* glob
-    # silently dropped CORRECTNESS_r10.json, leaving r10-attested keys
-    # looking r6-stale
-    files = sorted(glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json")))
-    if not files:
-        return
-    from net7_etl_bus_spark.plans.registry import _REVERIFY
-
-    latest: dict[str, int] = {}
-    for p in files:
-        m = re.search(r"_r0*(\d+)\.json$", p)
-        if m is None:
-            continue  # nonconforming file name (ADVICE r9)
-        rnd = int(m.group(1))
-        if rnd > 12:
-            continue  # composition was computed from r01..r12
-        for k, v in json.load(open(p)).items():
-            # failed entries don't attest (ADVICE r9), and verdicts at
-            # or before a key's _REVERIFY oracle-edit round attest the
-            # OLD oracle form (ADVICE r11) — mirror
-            # scripts/rotation.py's rules
-            if (
-                v.get("err") is None
-                and v.get("rows_match") is True
-                and v.get("schema_match") is True
-                and v.get("hash_match") is not False
-                and rnd > _REVERIFY.get(k, 0)
-            ):
-                latest[k] = max(latest.get(k, 0), rnd)
-
-    front = set(_SWEEP_PRIORITY[:50])
-    # Keys whose oracle was edited since their latest verdict are
-    # effectively never-attested on their current form: they take
-    # front slots regardless of verdict age (and must be in front)
-    # UNTIL a post-edit verdict lands, at which point the dict-scoped
-    # rule above stops masking them and the entry is inert (ADVICE
-    # r11: the old unconditional mask pinned attested keys forever).
-    unattested_rv = {k for k in _REVERIFY if k not in latest}
-    assert unattested_rv <= front, (
-        f"_REVERIFY keys without a post-edit verdict must be in the "
-        f"front-50: {unattested_rv - front}"
-    )
-    never = {k for k in q if k not in latest}
-    assert never <= front, f"never-attested keys missing from front-50: {never - front}"
-    r8_stale = {k for k, v in latest.items() if v == 8}
-    # the r8 group (50 keys) no longer fits whole beside the new +
-    # reverify keys: exactly three alphabetical-last r8 keys slip to
-    # r14 (never-attested-on-current-form outranks stale-but-verified)
-    assert len(never) == 3 and len(r8_stale - front) == 3, (
-        f"expected exactly 3 never-attested keys and 3 slipped r8-stale "
-        f"keys, got new={never}, slipped={r8_stale - front}"
-    )
-    assert r8_stale - front == set(sorted(r8_stale)[-3:]), (
-        "the slipped r8-stale keys must be the alphabetical tail "
-        f"(fillers are taken sorted-first), got {r8_stale - front}"
-    )
-    assert all(latest.get(k) in (None, 8) for k in front), (
-        "front-50 keys must be never-attested (new or edited-oracle) "
-        "or r8-stale, "
-        f"got: { {k: latest.get(k) for k in front if latest.get(k) not in (None, 8)} }"
-    )
-
-    # Generator/checker agreement: the committed tuple's front-50 must
-    # be exactly what scripts/rotation.py computes from the same
-    # verdict files (up to ordering). The generator makes each round's
-    # rotation a paste, the checker pins the paste — two independent
-    # paths over the same inputs (r9).
-    import sys
-
-    sys.path.insert(0, os.path.join(repo_root, "scripts"))
-    try:
-        from rotation import front50
-    finally:
-        sys.path.pop(0)
-    assert front == set(front50(list(q), latest)), (
-        "committed front-50 disagrees with scripts/rotation.py"
-    )
-
-
 def test_probe_row_cap_enforced_and_release(spark):
     """probes.materialized_nonempty relied on callers GUARANTEEING a
     bounded relation; nothing enforced it (VERDICT r8 item 6). Pin:

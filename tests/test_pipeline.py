@@ -54,12 +54,90 @@ def test_full_run_golden_values(spark, paths):
     assert row["FileChecksum"] == file_checksum(ZIP_CSV_PATH)
 
 
-def test_rerun_same_file_gated(spark, paths):
-    run_etl(spark, ZIP_CSV_PATH, paths["target"], paths["control"], now=NOW)
-    res2 = run_etl(
-        spark, ZIP_CSV_PATH, paths["target"], paths["control"], now=NOW + timedelta(hours=1)
+def _job_ids(sc, group, fn, *a, **kw):
+    """Run fn under job group ``group``; return (fn's result, the ids of
+    the Spark jobs submitted in that group). Restores the caller's
+    group, so calls may nest."""
+    outer = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        out = fn(*a, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", outer)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_rerun_same_file_gated(spark, paths, monkeypatch):
+    """The gate and the control-table bookkeeping are driver-side: the
+    gate, insert and finalize calls of a full run submit no Spark job,
+    and a gated trigger submits none at all."""
+    from net7_etl_bus_spark import pipeline
+    from net7_etl_bus_spark.sources import sinks
+
+    sc = spark.sparkContext
+    for mod, name in (
+        (pipeline, "evaluate_run_gate"),
+        (sinks, "control_insert_running"),
+        (sinks, "control_finalize"),
+    ):
+        real = getattr(mod, name)
+        monkeypatch.setattr(
+            mod, name, lambda *a, _f=real, **kw: _job_ids(sc, "control", _f, *a, **kw)[0]
+        )
+    res, run_jobs = _job_ids(
+        sc, "full-run", run_etl, spark, ZIP_CSV_PATH, paths["target"], paths["control"], now=NOW
+    )
+    assert res.should_run and run_jobs  # the counting sees the run's own jobs
+    res2, gated_jobs = _job_ids(
+        sc,
+        "gated-run",
+        run_etl,
+        spark,
+        ZIP_CSV_PATH,
+        paths["target"],
+        paths["control"],
+        now=NOW + timedelta(hours=1),
     )
     assert not res2.should_run  # same checksum, completed within TTL
+    assert list(sc.statusTracker().getJobIdsForGroup("control")) == []
+    assert gated_jobs == []
+
+
+@pytest.mark.parametrize("layout", ["fixture_file", "spark_dir"])
+def test_control_rows_round_trip(spark, paths, layout):
+    """A run appends its row to an existing control table, read as the
+    committed single pyarrow file or as a Spark-written directory:
+    Spark reads the rewritten table with ETL_IMPORT_SCHEMA's types, the
+    fixture's rows 1-4 are unchanged and row 5 is finalized."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from net7_etl_bus_spark.data import ETL_IMPORTS_PATH
+    from net7_etl_bus_spark.schemas import ETL_IMPORT_SCHEMA
+
+    fixture_rows = pq.read_table(ETL_IMPORTS_PATH).to_pylist()
+    if layout == "fixture_file":
+        shutil.copy(ETL_IMPORTS_PATH, paths["control"])
+    else:
+        spark.createDataFrame(fixture_rows, ETL_IMPORT_SCHEMA).write.parquet(paths["control"])
+    res = run_etl(spark, ZIP_CSV_PATH, paths["target"], paths["control"], now=NOW)
+    assert res.run_id == 5
+
+    control = spark.read.parquet(paths["control"])
+    assert [f.dataType for f in control.schema] == [f.dataType for f in ETL_IMPORT_SCHEMA]
+    rows = [r.asDict() for r in control.orderBy("Id").collect()]
+    assert rows[:4] == fixture_rows
+    assert rows[4] == {
+        "Id": 5,
+        "FileName": ZIP_CSV_PATH.rsplit("/", 1)[-1],
+        "FileChecksum": file_checksum(ZIP_CSV_PATH),
+        "IsActive": False,
+        "Status": "Complete",
+        "ImportStartTimeUtc": NOW,
+        "EndDateTimeUtc": NOW,
+    }
 
 
 def test_force_run_bypasses_gate_and_antijoin_skips_rows(spark, paths):
