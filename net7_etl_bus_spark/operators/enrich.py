@@ -18,12 +18,17 @@ Spark-first redesign:
   spread the whole stage is ONE task waiting on calls while the other
   task slots idle. Each row costs three external calls (milliseconds);
   the exchange costs microseconds per row, so the spread always pays.
-* Concurrency is an explicit per-task knob (thread pool of size N),
-  so external-API pressure = defaultParallelism x N and can be
-  budgeted: size the cluster's cores and N so that product stays
-  <= the API rate budget.
-* The budget itself is ENFORCED, not just documented: a per-task
-  :class:`TokenBucket` gates every outbound call. Its rate is
+* Each task works on its Arrow batches in two call waves on one
+  thread pool of ``2 x N`` workers (N = ``max_concurrency``; see
+  :func:`enrich_rows`): N lanes geocode every row, then 2N lanes run
+  the elevation and timezone calls of the geocoded rows together. So
+  per task, geocode calls in flight stay <= N and all calls in flight
+  peak at 2N, in wave 2; external-API concurrency is at most
+  defaultParallelism x 2N. Size the cluster's cores and N against the
+  API's concurrency limit.
+* The API's RATE budget is ENFORCED, not just documented: a per-task
+  :class:`TokenBucket` gates every outbound call of both waves, the
+  overlapped elevation and timezone calls included. Its rate is
   ``per_task_rate(budget, defaultParallelism)`` — the exact share,
   since that is how many tasks the stage runs — so even if the
   scheduler feeds a task more batches than planned, aggregate
@@ -31,8 +36,10 @@ Spark-first redesign:
   (``rate_limiter_factory``) — there is no cross-executor coordination
   to depend on, which is exactly why the per-task quotient is the
   right mechanism on a shared-nothing cluster (SURVEY.md §7.4.5).
-* Arrow batches in/out, but the Python cost is per row: the pool
-  submits one call chain per row.
+* The Python cost is per call, not per future: a wave submits one
+  future per lane and every lane pulls row indices from one shared
+  iterator, so a row's two dependent calls cost no future and no
+  extra round trip — its critical path is two calls, not three.
 * The client is injected (callable factory) — production wires an
   HTTP client; tests and the golden pipeline use the deterministic
   mock below, mirroring the reference's own mocked-API test strategy
@@ -43,7 +50,6 @@ from __future__ import annotations
 
 import concurrent.futures
 from collections.abc import Callable, Iterator
-from dataclasses import dataclass, field
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -53,14 +59,6 @@ from ..data import spread
 
 # Columns appended by the enrichment stage.
 ENRICHMENT_COLUMNS = ("Latitude", "Longitude", "Elevation", "Timezone")
-
-
-@dataclass
-class EnrichmentResult:
-    latitude: float | None = None
-    longitude: float | None = None
-    elevation: float | None = None
-    timezone: str | None = None
 
 
 class DeterministicMockClient:
@@ -209,7 +207,10 @@ def per_task_rate(global_budget_per_sec: float, expected_tasks: int) -> float:
     its stage to exactly ``defaultParallelism`` tasks, so pass
     ``expected_tasks=spark.sparkContext.defaultParallelism`` for the
     exact share — overestimating wastes quota, underestimating
-    overshoots by the ratio."""
+    overshoots by the ratio. The share does not change with the call
+    waves: a task's bucket gates all of its calls, so overlapping a
+    row's elevation and timezone calls changes when tokens are taken,
+    not how many."""
     if expected_tasks <= 0:
         raise ValueError(f"expected_tasks must be > 0, got {expected_tasks}")
     return float(global_budget_per_sec) / float(expected_tasks)
@@ -259,38 +260,84 @@ def retrying(call, attempts: int = 3, base_delay: float = 0.1, sleeper=None):
     raise last
 
 
-def enrich_record(client, zipcode: str, attempts: int = 1, sleeper=None):
-    """The reference's per-row chain: geocode gates elevation+timezone;
-    elevation and timezone failures are independent of each other
-    (DataflowProcessor.cs:188-214). Returns (result, error) — error is
-    None on full success, else 'stage: message' for the quarantine
-    channel. Transient failures are retried per stage."""
-    out = EnrichmentResult()
-    error = None
-    try:
-        out.latitude, out.longitude = retrying(
-            lambda: client.geocode(zipcode), attempts, sleeper=sleeper
-        )
-    except Exception as e:
-        # geocode failed -> all enrichment columns stay null
-        return out, f"geocode: {e}"
-    try:
-        out.elevation = retrying(
-            lambda: client.elevation(zipcode, out.latitude, out.longitude),
-            attempts,
-            sleeper=sleeper,
-        )
-    except Exception as e:
-        error = f"elevation: {e}"
-    try:
-        out.timezone = retrying(
-            lambda: client.timezone(zipcode, out.latitude, out.longitude),
-            attempts,
-            sleeper=sleeper,
-        )
-    except Exception as e:
-        error = f"{error}; timezone: {e}" if error else f"timezone: {e}"
-    return out, error
+def _run_lanes(pool, lanes: int, work, n_items: int) -> None:
+    """Run ``work(k)`` for every ``k`` in ``range(n_items)`` on up to
+    ``lanes`` tasks of ``pool``; return when all of them are done. Each
+    lane pulls the next item from one shared range iterator (a C
+    iterator: ``next()`` on it is safe across threads, where a
+    generator would raise "generator already executing"), so a wave
+    costs one future per lane, not one per item."""
+    items = iter(range(n_items))
+
+    def lane() -> None:
+        for k in items:
+            work(k)
+
+    for f in [pool.submit(lane) for _ in range(min(lanes, n_items))]:
+        f.result()
+
+
+def enrich_rows(client, zips, pool, lanes: int, attempts: int = 1, sleeper=None):
+    """The reference's per-row chain over one batch of zip codes:
+    geocode gates elevation+timezone; elevation and timezone failures
+    are independent of each other (DataflowProcessor.cs:188-214).
+
+    Two waves on ``pool`` (which must have ``2 * lanes`` workers):
+
+    1. ``lanes`` lanes geocode every row — at most ``lanes`` geocode
+       calls in flight;
+    2. ``2 * lanes`` lanes run the elevation and timezone calls of the
+       geocoded rows, interleaved ``[e0, t0, e1, t1, ...]`` — the two
+       calls of a row overlap, so a row's critical path is two round
+       trips, not three, and at most ``2 * lanes`` calls are in flight.
+
+    Each call is retried on its own (:func:`retrying`). Returns the
+    columns as lists aligned with ``zips``: Latitude, Longitude,
+    Elevation, Timezone and EnrichmentError — null on full success,
+    else ``"geocode: ..."`` or ``"elevation: ...; timezone: ..."`` (the
+    parts that failed, in that order) for the quarantine channel."""
+    n = len(zips)
+    lat, lng, elev, tz = [None] * n, [None] * n, [None] * n, [None] * n
+    err = [None] * n
+    elev_err, tz_err = [None] * n, [None] * n
+
+    def geocode(i: int) -> None:
+        try:
+            lat[i], lng[i] = retrying(
+                lambda: client.geocode(zips[i]), attempts, sleeper=sleeper
+            )
+        except Exception as e:  # per-row tolerance: the row passes through null
+            err[i] = f"geocode: {e}"
+
+    _run_lanes(pool, lanes, geocode, n)
+    done = [i for i in range(n) if err[i] is None]
+
+    stages = (
+        (client.elevation, elev, elev_err, "elevation"),
+        (client.timezone, tz, tz_err, "timezone"),
+    )
+
+    def dependent(k: int) -> None:
+        i = done[k >> 1]
+        call, values, errors, stage = stages[k & 1]
+        try:
+            values[i] = retrying(
+                lambda: call(zips[i], lat[i], lng[i]), attempts, sleeper=sleeper
+            )
+        except Exception as e:
+            errors[i] = f"{stage}: {e}"
+
+    _run_lanes(pool, 2 * lanes, dependent, 2 * len(done))
+    for i in done:
+        if elev_err[i] or tz_err[i]:
+            err[i] = "; ".join(e for e in (elev_err[i], tz_err[i]) if e)
+    return {
+        "Latitude": lat,
+        "Longitude": lng,
+        "Elevation": elev,
+        "Timezone": tz,
+        "EnrichmentError": err,
+    }
 
 
 def enrich_dataframe(
@@ -304,22 +351,26 @@ def enrich_dataframe(
     rate_limiter_factory: Callable[[], TokenBucket] | None = None,
 ) -> DataFrame:
     """Append Latitude/Longitude/Elevation/Timezone via bounded-parallel
-    per-row enrichment (mapInPandas + per-task thread pool).
+    enrichment (mapInPandas + per-task thread pool, two call waves per
+    Arrow batch).
 
     The input is hash-spread on ``zip_column`` to ``defaultParallelism``
     partitions first (``data.spread``; a planned exchange, no
     Spark job runs here), so the stage runs ``defaultParallelism``
-    tasks whatever the input's split count. The pool size is the
+    tasks whatever the input's split count. ``max_concurrency`` is the
     reference's TransformMaxDegreeOfParallelism (Constants.cs:21
-    default 5) — but per task: total external-call parallelism is
-    defaultParallelism x max_concurrency. The RATE budget is
-    enforced, not inferred from the pool: pass
-    ``rate_limiter_factory=lambda: TokenBucket(per_task_rate(budget,
-    defaultParallelism))`` and every outbound call on every pool thread
-    acquires a token first, capping each task's sustained call rate at
-    its exact share of the cluster-wide API quota. Built once per task
-    like the client, so there is no serialized shared state and no
-    cross-executor coordination.
+    default 5), per task: each task enriches its batches in two waves
+    (:func:`enrich_rows`) on one pool of ``2 x max_concurrency``
+    threads — at most ``max_concurrency`` geocode calls in flight, then
+    at most ``2 x max_concurrency`` elevation and timezone calls. Total
+    external-call parallelism is defaultParallelism x 2 x
+    max_concurrency. The RATE budget is enforced, not inferred from the
+    pool: pass ``rate_limiter_factory=lambda:
+    TokenBucket(per_task_rate(budget, defaultParallelism))`` and every
+    outbound call of both waves acquires a token first, capping each
+    task's sustained call rate at its exact share of the cluster-wide
+    API quota. Built once per task like the client, so there is no
+    serialized shared state and no cross-executor coordination.
 
     ``attempts`` > 1 retries each call with backoff+jitter;
     ``with_error_column=True`` appends EnrichmentError (null on
@@ -339,25 +390,20 @@ def enrich_dataframe(
     if with_error_column:
         out_schema = out_schema.add("EnrichmentError", "string")
 
+    columns = out_schema.names[len(df.schema.fields):]
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         client = client_factory()  # one client per task (per connection pool)
         if rate_limiter_factory is not None:
             client = RateLimitedClient(client, rate_limiter_factory())
-        with concurrent.futures.ThreadPoolExecutor(max_workers=max_concurrency) as pool:
+        with concurrent.futures.ThreadPoolExecutor(max_workers=2 * max_concurrency) as pool:
             for pdf in batches:
-                results = list(
-                    pool.map(
-                        lambda z: enrich_record(client, z, attempts, sleeper),
-                        pdf[zip_column],
-                    )
+                out = enrich_rows(
+                    client, pdf[zip_column].tolist(), pool, max_concurrency,
+                    attempts, sleeper,
                 )
-                pdf = pdf.copy()
-                pdf["Latitude"] = [r.latitude for r, _ in results]
-                pdf["Longitude"] = [r.longitude for r, _ in results]
-                pdf["Elevation"] = [r.elevation for r, _ in results]
-                pdf["Timezone"] = [r.timezone for r, _ in results]
-                if with_error_column:
-                    pdf["EnrichmentError"] = [err for _, err in results]
+                for c in columns:
+                    pdf[c] = out[c]
                 yield pdf
 
     return spread(df, zip_column).mapInPandas(run, out_schema)

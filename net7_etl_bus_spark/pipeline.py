@@ -210,8 +210,10 @@ def run_etl(
 
         # Step 4 — enrichment (T1-T4) + audit columns (P4).
         # enrich_dataframe hash-spreads ``todo`` to defaultParallelism
-        # tasks, each with its own max_concurrency pool, so the
-        # single-split CSV does not leave the stage on one core.
+        # tasks, so the single-split CSV does not leave the stage on one
+        # core. Each task geocodes its rows on max_concurrency lanes,
+        # then runs their elevation and timezone calls together on
+        # 2 x max_concurrency lanes of one pool.
         # Persisted: every downstream action (quarantine write, count,
         # MERGE write) reads the one cached enrichment pass — without
         # it each action re-executes the mapInPandas stage, multiplying
@@ -392,19 +394,21 @@ def run_etl_from_config(
     (appSettings.json `ProcessingSettings`):
 
     * ``ValidRecordDaysTtl``     -> TTL for the freshness gate/filter
-    * ``ActionMaxDegreesOfParallelism`` -> enrichment concurrency cap
+    * ``TransformMaxDegreeOfParallelism`` -> enrichment concurrency cap
+      (``max_concurrency``; the reference's transform-block MaxDOP,
+      appSettings.json:11, Constants.cs:21)
     * plus engine-side ``Paths`` {InputCsv, Target, Control,
       Quarantine?} and ``OnDuplicate`` / ``ForceRun`` policies.
 
-    The reference's Transform/Action split and BatchRecordSaveCount
-    have no Spark counterpart (Catalyst stages and writer batching
-    subsume them) — unknown keys are rejected rather than silently
+    The reference's sink-side settings (``ActionMaxDegreesOfParallelism``,
+    ``BatchRecordSaveCount``) have no Spark counterpart (Catalyst
+    stages and writer batching subsume them) — unknown keys are rejected rather than silently
     ignored, so a config typo can't quietly change behavior.
     """
     known = {
         "Paths",
         "ValidRecordDaysTtl",
-        "ActionMaxDegreesOfParallelism",
+        "TransformMaxDegreeOfParallelism",
         "OnDuplicate",
         "ForceRun",
     }
@@ -422,7 +426,7 @@ def run_etl_from_config(
         control_path=paths["Control"],
         quarantine_path=paths.get("Quarantine"),
         ttl_days=int(config.get("ValidRecordDaysTtl", DEFAULT_TTL_DAYS)),
-        max_concurrency=int(config.get("ActionMaxDegreesOfParallelism", 5)),
+        max_concurrency=int(config.get("TransformMaxDegreeOfParallelism", 5)),
         on_duplicate=config.get("OnDuplicate", "error"),
         force_run=bool(config.get("ForceRun", False)),
         client_factory=client_factory,

@@ -233,6 +233,8 @@ def read_control(path: str) -> list[dict]:
 
 
 def _write_control(rows: list[dict], path: str) -> None:
+    # the first run may name a control path in a directory not made yet
+    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
     tmp = f"{path}.tmp-{uuid.uuid4().hex}"
     pq.write_table(pa.Table.from_pylist(rows, schema=_CONTROL_ARROW), tmp)
     _swap_in(tmp, path)

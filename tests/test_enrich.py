@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import concurrent.futures
 import threading
 
 from pyspark.sql import functions as F
@@ -9,12 +10,22 @@ from pyspark.sql import functions as F
 from net7_etl_bus_spark.operators.enrich import (
     DeterministicMockClient,
     enrich_dataframe,
-    enrich_record,
+    enrich_rows,
 )
 
 
 def _zip_df(spark, zips):
     return spark.createDataFrame([(z,) for z in zips], "ZipCode string")
+
+
+def _enrich(client, zips, lanes=2, attempts=1):
+    """``enrich_rows`` in-process, on a pool sized as each enrichment
+    task sizes it, retries without sleeping; the rows as (lat, lng,
+    elevation, tz, error)."""
+    with concurrent.futures.ThreadPoolExecutor(max_workers=2 * lanes) as pool:
+        out = enrich_rows(client, zips, pool, lanes, attempts, lambda s: None)
+    cols = ("Latitude", "Longitude", "Elevation", "Timezone", "EnrichmentError")
+    return list(zip(*(out[c] for c in cols)))
 
 
 def test_golden_values(spark):
@@ -32,14 +43,36 @@ def test_reference_live_test_zip(spark):
 
 def test_failure_independence():
     c = DeterministicMockClient(fail_elevation={"11111"})
-    r, err = enrich_record(c, "11111")
-    assert r.latitude is not None and r.timezone is not None
-    assert r.elevation is None
+    [(lat, _, elev, tz, err)] = _enrich(c, ["11111"])
+    assert lat is not None and tz is not None
+    assert elev is None
     assert err and err.startswith("elevation:")
     c2 = DeterministicMockClient(fail_timezone={"11111"})
-    r2, err2 = enrich_record(c2, "11111")
-    assert r2.elevation is not None and r2.timezone is None
+    [(_, _, elev2, tz2, err2)] = _enrich(c2, ["11111"])
+    assert elev2 is not None and tz2 is None
     assert err2 and err2.startswith("timezone:")
+
+
+def test_both_dependent_failures_reported_in_order():
+    """Elevation and timezone both failing on one row gives one error
+    naming both, elevation first, although timezone fails first here;
+    the other rows of the batch are untouched."""
+
+    class SlowElevation(DeterministicMockClient):
+        def elevation(self, z, lat, lng):
+            import time
+
+            time.sleep(0.05)
+            return super().elevation(z, lat, lng)
+
+    c = SlowElevation(fail_elevation={"11111"}, fail_timezone={"11111"})
+    rows = _enrich(c, ["11111", "22222"])
+    lat, lng, elev, tz, err = rows[0]
+    assert (lat, lng) == c.geocode("11111") and elev is None and tz is None
+    assert err == (
+        "elevation: elevation failed for 11111; timezone: timezone failed for 11111"
+    )
+    assert rows[1][4] is None and rows[1][2] is not None and rows[1][3] is not None
 
 
 def test_geocode_failure_gates_dependent_calls():
@@ -47,19 +80,68 @@ def test_geocode_failure_gates_dependent_calls():
 
     class Spy(DeterministicMockClient):
         def geocode(self, z):
-            raise RuntimeError("down")
+            if z == "99999":
+                raise RuntimeError("down")
+            return super().geocode(z)
 
-        def elevation(self, *a):
-            calls.append("elevation")
+        def elevation(self, z, *a):
+            calls.append(("elevation", z))
             return 0.0
 
-        def timezone(self, *a):
-            calls.append("timezone")
+        def timezone(self, z, *a):
+            calls.append(("timezone", z))
             return "x"
 
-    r, err = enrich_record(Spy(), "99999")
-    assert r.latitude is None and calls == []  # T2/T3 never attempted
-    assert err and err.startswith("geocode:")
+    rows = _enrich(Spy(), ["99999", "10001"])
+    lat, _, _, _, err = rows[0]
+    assert lat is None  # T2/T3 never attempted for the failed row
+    assert sorted(calls) == [("elevation", "10001"), ("timezone", "10001")]
+    assert err == "geocode: down"
+    assert rows[1][4] is None
+
+
+def test_elevation_and_timezone_of_a_row_overlap():
+    """Wave 2 runs a row's elevation and timezone calls at the same
+    time: the spy's elevation(z) waits (2 s at most) for timezone(z) of
+    the same zip to start. A chain that runs them one after the other
+    times out on every row and reports an elevation error."""
+    lock = threading.Lock()
+    started: dict[str, threading.Event] = {}
+
+    def event(z):
+        with lock:
+            return started.setdefault(z, threading.Event())
+
+    class Spy(DeterministicMockClient):
+        def elevation(self, z, lat, lng):
+            if not event(z).wait(2.0):
+                raise RuntimeError("timezone did not overlap")
+            return super().elevation(z, lat, lng)
+
+        def timezone(self, z, lat, lng):
+            event(z).set()
+            return super().timezone(z, lat, lng)
+
+    zips = [str(10000 + i) for i in range(9)]
+    rows = _enrich(Spy(), zips, lanes=1)  # the narrowest pool: 2 threads
+    assert [r[4] for r in rows] == [None] * len(zips)
+    mock = DeterministicMockClient()
+    assert [r[2] for r in rows] == [mock.elevation(z, 0, 0) for z in zips]
+
+
+def test_rate_limiter_gates_every_call():
+    """A task's token bucket is taken once per call of both waves: the
+    overlapped elevation and timezone calls are gated too, and a row
+    whose geocode failed costs one token."""
+    from net7_etl_bus_spark.operators.enrich import RateLimitedClient, TokenBucket
+
+    zips = [str(10000 + i) for i in range(50)]
+    fail = {zips[3], zips[17], zips[40]}
+    bucket = TokenBucket(rate=1e9)
+    client = RateLimitedClient(DeterministicMockClient(fail_geocode=fail), bucket)
+    rows = _enrich(client, zips, lanes=4)
+    assert sum(r[0] is None for r in rows) == len(fail)
+    assert bucket.acquired == 3 * len(zips) - 2 * len(fail)
 
 
 def test_per_row_errors_never_fail_job(spark):
@@ -71,37 +153,57 @@ def test_per_row_errors_never_fail_job(spark):
 
 
 def test_bounded_concurrency(spark):
-    """Observed in-flight parallelism never exceeds max_concurrency
-    (the reference's MaxDegreeOfParallelism semantics). The cap is per
-    task: the spy state is built once per factory call, which is once
-    per task, and the stage runs defaultParallelism tasks. The spy
-    client runs inside the executor's Python worker, so violations are
-    reported in-band: a geocode observed above the limit raises, which
-    would surface as a null Latitude."""
+    """Observed in-flight parallelism stays within the two-wave
+    contract: at most max_concurrency geocode calls (the reference's
+    MaxDegreeOfParallelism semantics) and at most 2 x max_concurrency
+    calls of any kind, in wave 2. The caps are per task: the spy state
+    is built once per factory call, which is once per task, and the
+    stage runs defaultParallelism tasks. The spy client runs inside the
+    executor's Python worker, so violations are reported in-band: a
+    call observed above its limit raises, which would surface as a
+    null column."""
 
     def factory():
         lock = threading.Lock()
-        state = {"now": 0}
+        state = {"geocode": 0, "all": 0}
+        cap = {"geocode": 3, "all": 6}
 
         class Slow(DeterministicMockClient):
-            def geocode(self, z):
+            def _slow(self, call, kinds, *a):
                 import time
 
                 with lock:
-                    state["now"] += 1
-                    if state["now"] > 3:
-                        raise RuntimeError("concurrency cap exceeded")
-                time.sleep(0.02)
-                with lock:
-                    state["now"] -= 1
-                return super().geocode(z)
+                    for k in kinds:
+                        state[k] += 1
+                    over = [k for k in kinds if state[k] > cap[k]]
+                try:
+                    if over:
+                        raise RuntimeError(f"concurrency cap exceeded: {over}")
+                    time.sleep(0.02)
+                    return call(*a)
+                finally:
+                    with lock:
+                        for k in kinds:
+                            state[k] -= 1
+
+            def geocode(self, z):
+                return self._slow(super().geocode, ("geocode", "all"), z)
+
+            def elevation(self, *a):
+                return self._slow(super().elevation, ("all",), *a)
+
+            def timezone(self, *a):
+                return self._slow(super().timezone, ("all",), *a)
 
         return Slow()
 
     df = _zip_df(spark, [f"{10000 + i}" for i in range(40)])
     rows = enrich_dataframe(df, factory, max_concurrency=3).collect()
     assert len(rows) == 40
-    assert all(r["Latitude"] is not None for r in rows)  # no cap violations
+    # no cap violations
+    assert all(
+        None not in (r["Latitude"], r["Elevation"], r["Timezone"]) for r in rows
+    )
 
 
 def test_null_columns_added_with_right_types(spark):
@@ -136,6 +238,38 @@ def test_retries_recover_transient_failures():
 
     with _pytest.raises(RuntimeError):
         retrying(Flaky(), attempts=1, sleeper=delays.append)
+
+
+def test_retries_are_per_call_in_both_waves():
+    """Each call retries on its own: a client whose geocode and timezone
+    fail twice per zip before succeeding enriches fully with attempts=3,
+    and with attempts=1 every row reports its geocode failure."""
+
+    class Flaky(DeterministicMockClient):
+        def __init__(self):
+            super().__init__()
+            self.lock = threading.Lock()
+            self.seen = {}
+
+        def _flaky(self, key):
+            with self.lock:
+                self.seen[key] = self.seen.get(key, 0) + 1
+                if self.seen[key] <= 2:
+                    raise RuntimeError(f"transient {key}")
+
+        def geocode(self, z):
+            self._flaky(("geocode", z))
+            return super().geocode(z)
+
+        def timezone(self, z, lat, lng):
+            self._flaky(("timezone", z))
+            return super().timezone(z, lat, lng)
+
+    zips = [str(10000 + i) for i in range(8)]
+    assert all(r[4] is None and r[3] is not None for r in _enrich(Flaky(), zips, attempts=3))
+    assert [r[4] for r in _enrich(Flaky(), zips)] == [
+        f"geocode: transient ('geocode', '{z}')" for z in zips
+    ]
 
 
 def test_quarantine_split(spark):

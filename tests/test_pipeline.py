@@ -140,6 +140,20 @@ def test_control_rows_round_trip(spark, paths, layout):
     }
 
 
+def test_control_path_in_new_directory(spark, tmp_path):
+    """The first run creates the control table's parent directory, as
+    it does the target's: a control path under a directory that does
+    not exist yet commits its Running row and finalizes it."""
+    from net7_etl_bus_spark.sources import sinks
+
+    control = str(tmp_path / "state" / "imports" / "etl_bus_imports.parquet")
+    target = str(tmp_path / "out" / "zip_code_details.parquet")
+    res = run_etl(spark, ZIP_CSV_PATH, target, control, now=NOW)
+    assert res.should_run and res.run_id == 1 and res.rows_upserted > 0
+    [row] = sinks.read_control(control)
+    assert (row["Id"], row["Status"], row["IsActive"]) == (1, "Complete", False)
+
+
 def test_force_run_bypasses_gate_and_antijoin_skips_rows(spark, paths):
     run_etl(spark, ZIP_CSV_PATH, paths["target"], paths["control"], now=NOW)
     res2 = run_etl(
@@ -398,7 +412,7 @@ def test_config_driven_run_matches_direct_call(spark, paths, tmp_path):
             "Control": paths["control"],
         },
         "ValidRecordDaysTtl": 30,
-        "ActionMaxDegreesOfParallelism": 5,
+        "TransformMaxDegreeOfParallelism": 5,
     }
     cfg_path = tmp_path / "run.json"
     cfg_path.write_text(json.dumps(cfg))
@@ -412,8 +426,10 @@ def test_config_driven_run_matches_direct_call(spark, paths, tmp_path):
     b = spark.read.parquet(direct_target).drop("ImportId").sort("CompositeKey").collect()
     assert a == b and res.rows_upserted == res2.rows_upserted
 
-    with _pytest.raises(ValueError, match="unknown config keys"):
-        run_etl_from_config(spark, {**cfg, "BatchRecordSaveCount": 50}, now=NOW)
+    # the reference's sink-side settings have no counterpart here
+    for key in ("BatchRecordSaveCount", "ActionMaxDegreesOfParallelism"):
+        with _pytest.raises(ValueError, match="unknown config keys"):
+            run_etl_from_config(spark, {**cfg, key: 5}, now=NOW)
     with _pytest.raises(ValueError, match="Paths"):
         run_etl_from_config(spark, {"ValidRecordDaysTtl": 30}, now=NOW)
 
